@@ -8,6 +8,23 @@ B-tree indexes (`mart_temperature_readings.sql:4-12`); the Spark analog
 (see ``write_mart``) is parquet partitioned by ``reading_date`` — partition
 pruning + row-group min/max stats replace the indexes at scale.
 
+Two rules serve the mart's readers (the five summaries and the run
+report):
+
+- **Rebalance by the partition column before a partitioned write.** Each
+  write task otherwise leaves one small file per date it holds (tasks ×
+  dates files, every footer parsed by every later read); a rebalance on
+  ``reading_date`` sends each date to one task, and AQE still splits a
+  date larger than the advisory size into several files.
+- **Distinct counts: bounded domain → ``collect_set``, unbounded key →
+  ``countDistinct``.** Spark plans two or more distinct aggregates in one
+  ``agg`` with an ``Expand`` that copies every row once per distinct
+  column, plus two extra aggregation levels. Each summary therefore keeps
+  at most one ``countDistinct``, on ``device_id``, and counts the columns
+  whose values per group are few (location, environment, load id, a
+  device's days) as ``size(collect_set(x))`` — NULLs ignored and 0 on
+  empty input, exactly as ``COUNT(DISTINCT x)``.
+
 The summary model's CTEs `load_level_stats`, `device_level_stats`,
 `location_level_stats`, `anomaly_analysis` are DEAD CODE in the reference
 (`final_summary` selects only from `overall_stats` —
@@ -21,7 +38,7 @@ from __future__ import annotations
 
 import datetime
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.exprs import (
@@ -67,8 +84,20 @@ def mart_temperature_readings(
 def write_mart(mart: DataFrame, path: str) -> None:
     """Materialization analog of the indexed Postgres mart table: parquet
     partitioned by reading_date (point/range scans prune partitions), the
-    `is_anomaly`/`device_id` filters use row-group min-max stats."""
-    mart.write.mode("overwrite").partitionBy("reading_date").parquet(path)
+    `is_anomaly`/`device_id` filters use row-group min-max stats.
+
+    Layout rule: rebalance by the partition column first, so each
+    ``reading_date=`` directory gets one file (tasks × dates tiny files
+    without it), and AQE splits only a date above the advisory size."""
+    mart.hint("rebalance", "reading_date").write.mode("overwrite").partitionBy(
+        "reading_date"
+    ).parquet(path)
+
+
+def _n_distinct(col) -> Column:
+    """``COUNT(DISTINCT col)`` for a column with few values per group, with
+    no ``Expand`` in the plan (module docstring, distinct-count rule)."""
+    return F.size(F.collect_set(col)).cast("long")
 
 
 def load_level_stats(mart: DataFrame) -> DataFrame:
@@ -88,8 +117,8 @@ def load_level_stats(mart: DataFrame) -> DataFrame:
         F.min("data_quality_score").alias("min_data_quality_score"),
         F.max("data_quality_score").alias("max_data_quality_score"),
         F.countDistinct("device_id").alias("unique_devices"),
-        F.countDistinct("location").alias("unique_locations"),
-        F.countDistinct("environment_type").alias("unique_environments"),
+        _n_distinct("location").alias("unique_locations"),
+        _n_distinct("environment_type").alias("unique_environments"),
         F.min("reading_timestamp").alias("earliest_reading"),
         F.max("reading_timestamp").alias("latest_reading"),
     )
@@ -116,9 +145,9 @@ def device_level_stats(mart: DataFrame) -> DataFrame:
         ((F.unix_micros(F.max(ts)) - F.unix_micros(F.min(ts))) / 3.6e9).alias(
             "reading_span_hours"
         ),
-        F.countDistinct(F.date_trunc("day", ts)).alias("active_days"),
-        F.countDistinct("location").alias("locations_visited"),
-        F.countDistinct("environment_type").alias("environments_recorded"),
+        _n_distinct(F.date_trunc("day", ts)).alias("active_days"),
+        _n_distinct("location").alias("locations_visited"),
+        _n_distinct("environment_type").alias("environments_recorded"),
     )
 
 
@@ -165,9 +194,9 @@ def overall_stats(mart: DataFrame) -> DataFrame:
         F.min("data_quality_score").alias("global_min_quality_score"),
         F.max("data_quality_score").alias("global_max_quality_score"),
         F.countDistinct("device_id").alias("total_unique_devices"),
-        F.countDistinct("location").alias("total_unique_locations"),
-        F.countDistinct("environment_type").alias("total_environment_types"),
-        F.countDistinct("_dlt_load_id").alias("total_load_batches"),
+        _n_distinct("location").alias("total_unique_locations"),
+        _n_distinct("environment_type").alias("total_environment_types"),
+        _n_distinct("_dlt_load_id").alias("total_load_batches"),
         F.min(ts).alias("earliest_reading_timestamp"),
         F.max(ts).alias("latest_reading_timestamp"),
         ((F.unix_micros(F.max(ts)) - F.unix_micros(F.min(ts))) / 86400e6).alias(
@@ -272,7 +301,7 @@ def pipeline_run_report(
             "anomaly_records"
         ),
         F.countDistinct("device_id").alias("unique_devices"),
-        F.countDistinct("_dlt_load_id").alias("load_batches"),
+        _n_distinct("_dlt_load_id").alias("load_batches"),
     ).selectExpr(
         "'transform' AS stage",
         "stack(4, 'mart_rows', mart_rows, "

@@ -2074,25 +2074,18 @@ def vocab_growth_curve(
     the exact integer type-token ratio ttr_ppm = 10^6·cum_types ÷
     cum_tokens (Heaps exponent read off the curve shape, log-free).
 
-    Scale shape (optimization r12, guide §1.2): ONE token explode. The
-    old form fed the exploded stream into two separate aggregates
-    (bucket totals, token→min-bucket), re-running the corpus explode —
-    the operator's dominant cost — once per branch. Both now derive
-    from one map-side-combined (bucket, w) → count cell table (the
-    streamed curves' mergeable-cells shape): bucket totals are Σ cnt,
-    first-occurrence types a vocab-bounded min/count over the same
-    cells. Interleaved A/B at sf0.1: 0.511/0.541 → 0.459/0.470 s
-    min/med, rows identical. At 100 TB the explode halves and every
-    shuffle carries (bucket × vocab)-bounded cells, never the corpus;
-    the only window still runs over n_buckets rows."""
+    Scale shape: one scan exploding tokens with the bucket attached →
+    one map-side-combined (token → min bucket) aggregate + one
+    (bucket → token count) aggregate; the only window runs over
+    n_buckets rows. At 100 TB both shuffles carry vocabulary- and
+    bucket-bounded rows, never the corpus."""
     b = (
         portable_hash32(F.col("doc_id").cast("string"), seed=seed) % n_buckets
     ).alias("bucket")
     d = docs.select(b, F.explode(tokens(F.col("text"))).alias("w"))
-    cells = d.groupBy("bucket", "w").agg(F.count("*").alias("cnt"))
-    per_bucket = cells.groupBy("bucket").agg(F.sum("cnt").alias("n_tokens"))
+    per_bucket = d.groupBy("bucket").agg(F.count("*").alias("n_tokens"))
     firsts = (
-        cells.groupBy("w")
+        d.groupBy("w")
         .agg(F.min("bucket").alias("bucket"))
         .groupBy("bucket")
         .agg(F.count("*").alias("new_types"))

@@ -13,6 +13,15 @@ compare sorts columns by name and hashes values — see
   kind "long"  cast BIGINT  — DuckDB SUM(int)=HUGEINT, Spark hour()=int,
                both normalized to 64-bit
   kind "str"   cast VARCHAR — dates (pandas dtype drift) and similar
+
+DuckDB's ROUND(x, d) on a DOUBLE is ``round_half_away(x·10^d) / 10^d``
+on the binary value, while Spark's ``round(x, d)`` rounds HALF_UP on the
+shortest decimal form of x — they differ on values such as 37.76275
+(binary 37.762749999…, printed 37.76275). The Spark side therefore
+spells out DuckDB's arithmetic: ``round(x * 10000D) / 10000D``. At scale
+0 the two roundings agree, because the shortest decimal form of a double
+ends in exactly .5 only when the double is exactly a half, and both round
+halves away from zero.
 """
 
 from __future__ import annotations
@@ -67,16 +76,16 @@ def shape(df: DataFrame, spec: ColSpec) -> DataFrame:
     # selectExpr with pre-rendered strings, not per-column Column
     # objects: a 30-column spec as F.col().cast().alias() chains costs
     # ~120 py4j round trips (~0.1 s of driver latency PER QUERY BUILD);
-    # one selectExpr call parses everything JVM-side. Same expressions
-    # after parsing (round/cast are the SQL functions F.round/F.cast
-    # resolve to), so oracle parity is unchanged.
+    # one selectExpr call parses everything JVM-side (round/cast are the
+    # SQL functions F.round/F.cast resolve to). f4/f2 use DuckDB's ROUND
+    # arithmetic, see the module docstring.
     exprs = []
     for name, kind in spec:
         q = f"`{name}`"
         if kind == "f4":
-            exprs.append(f"round(CAST({q} AS DOUBLE), 4) AS {q}")
+            exprs.append(f"round(CAST({q} AS DOUBLE) * 10000D) / 10000D AS {q}")
         elif kind == "f2":
-            exprs.append(f"round(CAST({q} AS DOUBLE), 2) AS {q}")
+            exprs.append(f"round(CAST({q} AS DOUBLE) * 100D) / 100D AS {q}")
         elif kind == "long":
             exprs.append(f"CAST({q} AS BIGINT) AS {q}")
         elif kind == "str":
@@ -1152,8 +1161,6 @@ _CHANGED_R12 = [
     #   streamed twin shares the gate kernel
     "corpus_refresh_report",
     "streaming_corpus_refresh",
-    # - single-explode cells form for the Heaps'-law curve
-    "vocab_growth_curve",
 ]
 # Round-11 changed/new set (VERDICT r10 asks #2-#4 + ADVICE r10).
 # Kept deliberately SMALL: r11 is the staleness burn-down round —

@@ -9,11 +9,19 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 
 from pyspark.sql import functions as F
 
-from iot_temp_data_pipeline_spark.plans.registry import REGISTRY
+from iot_temp_data_pipeline_spark.operators.anomalies import int_temperature_anomalies
+from iot_temp_data_pipeline_spark.operators.marts import (
+    mart_temperature_readings,
+    write_mart,
+)
+from iot_temp_data_pipeline_spark.operators.staging import stg_raw_temperature_readings
+from iot_temp_data_pipeline_spark.plans.registry import ACTIVE_THRESHOLD, REGISTRY
 from iot_temp_data_pipeline_spark.sources.catalog import load_table
+from iot_temp_data_pipeline_spark.sources.readings import raw_readings
 
 
 def plan_of(df, mode: str = "formatted") -> str:
@@ -493,3 +501,44 @@ def test_winnowing_fingerprints_zero_exchange(spark, sf_dir):
     plan = plan_of(REGISTRY["doc_fingerprints_winnowing"].spark(spark, sf_dir))
     assert "Exchange" not in plan
     assert "Window" not in plan
+
+
+def test_mart_summaries_have_no_expand(spark, sf_dir):
+    """The mart's summaries keep at most one countDistinct (on device_id)
+    and count bounded-domain columns as size(collect_set), so no Expand
+    copies every mart row once per distinct column (operators/marts.py
+    distinct-count rule)."""
+    for name in (
+        "summary_by_load",
+        "summary_by_device",
+        "summary_overall",
+        "pipeline_run_report",
+    ):
+        plan = plan_of(REGISTRY[name].spark(spark, sf_dir))
+        assert "Expand" not in plan, name
+
+
+def test_write_mart_one_file_per_date_and_round_trips(spark, sf_dir, tmp_path):
+    """write_mart rebalances by reading_date: each date directory holds
+    exactly one parquet file, and reading the output back gives the
+    in-memory mart row for row."""
+    stg = stg_raw_temperature_readings(
+        raw_readings(spark, sf_dir), with_processing_timestamp=False
+    )
+    mart = mart_temperature_readings(
+        int_temperature_anomalies(stg, threshold=ACTIVE_THRESHOLD)
+    )
+    path = str(tmp_path / "mart")
+    write_mart(mart, path)
+    dates = [d for d in os.listdir(path) if d.startswith("reading_date=")]
+    assert dates
+    for d in dates:
+        files = [f for f in os.listdir(os.path.join(path, d)) if f.endswith(".parquet")]
+        assert len(files) == 1, (d, files)
+    back = spark.read.parquet(path).select(*mart.columns)
+    # parquet reads every column back as nullable; names and types hold
+    assert [(f.name, f.dataType) for f in back.schema] == [
+        (f.name, f.dataType) for f in mart.schema
+    ]
+    assert back.exceptAll(mart).isEmpty()
+    assert mart.exceptAll(back).isEmpty()
